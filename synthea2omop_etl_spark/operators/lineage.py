@@ -40,6 +40,10 @@ import os
 
 from pyspark.sql import DataFrame
 
+#: resolved Spark checkpoint dir → the SPARK_GRAFT_CHECKPOINT_DIR value
+#: cut_lineage set it from
+_KNOB_OF_DIR: dict[str, str] = {}
+
 
 def cut_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
     """Truncate ``df``'s lineage (see module docstring for the contract).
@@ -55,7 +59,12 @@ def cut_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
     ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if ckdir:
         sc = df.sparkSession.sparkContext
-        if not sc.getCheckpointDir():
+        # Spark resolves the dir to a fresh <ckdir>/<uuid> subdirectory,
+        # so remember which knob value produced the current one and
+        # re-set it whenever the knob has changed since
+        current = sc.getCheckpointDir()
+        if current is None or _KNOB_OF_DIR.get(current) != ckdir:
             sc.setCheckpointDir(ckdir)
+            _KNOB_OF_DIR[sc.getCheckpointDir()] = ckdir
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

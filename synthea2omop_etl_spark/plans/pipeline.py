@@ -1,15 +1,18 @@
-"""Step DAG + JSON checkpointing (reference: etl_pipeline/etl_main.py:43-108
-step list with dependencies; etl_setup.py:199-279 checkpoint/resume).
+"""Ordered ETL step list + JSON checkpointing (reference:
+etl_pipeline/etl_main.py:43-108 step list; etl_setup.py:199-279
+checkpoint/resume).
 
 The pipeline runs the Synthea→OMOP dataflow as pure DataFrame transforms:
 
     raw (all-string) → typed → person/visit maps → domain transforms
         → derived tables → validation
 
-Steps are declared with dependencies; completed steps are recorded in a
-JSON checkpoint and skipped on re-run (idempotent resume). Outputs are
-written as parquet layers; each step is replayable because inputs are
-immutable layers, not mutated tables (SURVEY.md §7.3).
+Steps run in list order; each declares the materialized omop_* layers it
+reads, and only those writes must land before it plans. Completed steps
+are recorded in a JSON checkpoint and their writes skipped on re-run
+(idempotent resume). Outputs are written as parquet layers; each step is
+replayable because inputs are immutable layers, not mutated tables
+(SURVEY.md §7.3).
 
 Scale notes: maps are computed once and cached (reused by every domain
 transform — the reference caches them in Postgres tables); independent
@@ -22,7 +25,8 @@ from __future__ import annotations
 import json
 import os
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -83,9 +87,9 @@ class Checkpoint:
 @dataclass
 class Step:
     name: str
-    deps: list[str]
     run: Callable[[dict[str, DataFrame]], dict[str, DataFrame]]
-    doc: str = ""
+    #: omop_* layers whose writes must land before the step plans
+    reads: tuple[str, ...] = ()
 
 
 def _typing_step(table: str):
@@ -94,16 +98,9 @@ def _typing_step(table: str):
             # Optional source: a Synthea output dir need not contain every
             # CSV (the reference's loader likewise skips absent files).
             return {}
-        raw = ctx[f"raw_{table}"]
-        typed = apply_typing(raw, TYPING_SPECS[table])
-        # SPARK_GRAFT_ETL_V in (1, 2) (r13 experiment): materialize the
-        # typed layer once (lazy localCheckpoint) so every consumer —
-        # domain transforms, id maps, cost — reads one typed copy instead
-        # of re-running scan+regex typing per consumer, and the per-domain
-        # planning below happens over a shallow LogicalRDD.
-        if os.environ.get("SPARK_GRAFT_ETL_V", "0") in ("1", "2"):
-            typed = typed.localCheckpoint(eager=False)
-        return {f"typed_{table}": typed}
+        return {f"typed_{table}": apply_typing(
+            ctx[f"raw_{table}"], TYPING_SPECS[table]
+        )}
 
     return run
 
@@ -189,20 +186,22 @@ def _concept_maps_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
 
 def _location_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
     """Build the location dim ONCE, before the domain transforms. The dim
-    is geography-bounded (distinct addresses) and cached; when an
-    output_dir is set, run_pipeline materializes omop_location to parquet
-    and the person/care_site transforms broadcast the tiny parquet
-    read-back instead of re-executing the distinct+dense-id build per
-    consumer (the r6 etl_rows_per_sec regression: the dim build ran 3×)."""
+    is geography-bounded (distinct addresses) and cached, so the
+    person/care_site transforms broadcast the cached plan (key
+    ``location_dim``) instead of re-executing the distinct+dense-id build
+    per consumer (the r6 etl_rows_per_sec regression: the dim build ran
+    3×). They do not wait for the omop_location write: BlockManager
+    serializes concurrent cache fills, so that write overlaps with the
+    domain writes instead of gating them."""
     from synthea2omop_etl_spark.derived.location import location
 
     loc = location(ctx["typed_patients"], ctx.get("typed_organizations"))
     if loc is None:
         return {}
     loc = loc.cache()
-    # second, non-materialized key keeps a handle on the cached plan so
-    # run_pipeline can unpersist it after the ctx swap to the parquet scan
-    return {"omop_location": loc, "location_dim_cache": loc}
+    # the non-omop_ key is never written or swapped to the parquet scan:
+    # the domain steps read it, and run_pipeline unpersists it at the end
+    return {"omop_location": loc, "location_dim": loc}
 
 
 # r13 (VERDICT r12 item 1): the monolithic `domains` step serialized
@@ -215,10 +214,9 @@ def _location_step(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
 # STRICTLY SERIAL on the main thread (pool-building the plans is the r12
 # measured dead end: GIL + analyzer contention, see
 # plans/r12/domains_threadpool_reverted.diff), only the overlap between
-# planning and executor work is new. A `domains` BARRIER step keeps the
-# step-name contract for derived deps, checkpoints, and /api/etl/status.
+# planning and executor work is new.
 #
-# Builder order: plan-expensive + write-heavy first (condition, drug,
+# Step order: plan-expensive + write-heavy first (condition, drug,
 # measurement/observation) so the biggest writes start earliest and the
 # cheap dimension builds plan under them.
 #
@@ -269,7 +267,7 @@ def _b_visit(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
 def _b_person(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
     return {"omop_person": person(
         ctx["typed_patients"], ctx["person_map"],
-        locations=ctx.get("omop_location"),
+        locations=ctx.get("location_dim"),
     )}
 
 
@@ -313,32 +311,13 @@ def _b_care_site(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
         return {}
     return {"omop_care_site": care_site(
         ctx["typed_organizations"], ctx["care_site_map"],
-        locations=ctx.get("omop_location"),
+        locations=ctx.get("location_dim"),
     )}
-
-
-_DOMAIN_BUILDERS: list[tuple[str, Callable, str]] = [
-    ("domain_condition_occurrence", _b_condition, "condition_occurrence"),
-    ("domain_drug_exposure", _b_drug, "drug_exposure (medications ∪ immunizations)"),
-    ("domain_measurement_observation", _b_meas_obs,
-     "observations split into measurement + observation"),
-    ("domain_visit_occurrence", _b_visit, "visit_occurrence"),
-    ("domain_person", _b_person, "person"),
-    ("domain_procedure_occurrence", _b_procedure, "procedure_occurrence"),
-    ("domain_device_exposure", _b_device, "device_exposure"),
-    ("domain_payer_plan_period", _b_payer, "payer_plan_period"),
-    ("domain_provider", _b_provider, "provider"),
-    ("domain_care_site", _b_care_site, "care_site"),
-]
-
-
-def _domains_barrier(ctx: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    return {}
 
 
 # The derived tables are FOUR independent builds with different input
 # needs — separate steps so each blocks only on the writes it reads
-# (STEP_READS): death starts before any domain write lands; eras wait for
+# (Step.reads): death starts before any domain write lands; eras wait for
 # two layers; cost for three; observation_period (which unions every
 # dated domain) goes last. Under the shared writer pool this overlaps
 # the derived builds with the tail of the domain writes.
@@ -423,86 +402,33 @@ YEAR_PARTITION_DATES: dict[str, str] = {
 
 
 ETL_STEPS: list[Step] = [
-    *[
-        Step(f"typing_{t}", [], _typing_step(t), f"cast-or-null typing of {t}")
-        for t in TYPING_SPECS
-    ],
-    Step(
-        "id_maps",
-        ["typing_patients", "typing_encounters", "typing_providers",
-         "typing_organizations"],
-        _maps_step,
-        "person/visit/provider/care_site UUID→dense-int maps",
-    ),
-    Step(
-        "concept_maps",
-        ["typing_conditions", "typing_medications", "typing_immunizations",
-         "typing_procedures", "typing_observations", "typing_devices"],
-        _concept_maps_step,
-        "source-code→standard-concept maps (when vocabulary supplied)",
-    ),
-    Step(
-        "location_dim",
-        ["typing_patients", "typing_organizations"],
-        _location_step,
-        "location dim from distinct patient ∪ organization addresses",
-    ),
-    *[
-        Step(
-            name,
-            ["id_maps", "concept_maps", "location_dim", "typing_conditions",
-             "typing_medications", "typing_procedures",
-             "typing_observations", "typing_immunizations",
-             "typing_devices", "typing_patient_expenses"],
-            fn,
-            doc,
-        )
-        for name, fn, doc in _DOMAIN_BUILDERS
-    ],
-    Step(
-        "domains",
-        [name for name, _, _ in _DOMAIN_BUILDERS],
-        _domains_barrier,
-        "all OMOP domain transforms (barrier over the per-domain steps)",
-    ),
-    Step("derived_death", ["id_maps"], _death_step, "death"),
-    Step("derived_eras", ["domains"], _eras_step,
-         "drug_era, condition_era"),
-    Step("derived_cost", ["domains"], _cost_step, "cost"),
-    Step("derived_observation_period", ["domains"], _obs_period_step,
-         "observation_period"),
+    *[Step(f"typing_{t}", _typing_step(t)) for t in TYPING_SPECS],
+    Step("id_maps", _maps_step),
+    Step("concept_maps", _concept_maps_step),
+    Step("location_dim", _location_step),
+    Step("domain_condition_occurrence", _b_condition),
+    Step("domain_drug_exposure", _b_drug),
+    Step("domain_measurement_observation", _b_meas_obs),
+    Step("domain_visit_occurrence", _b_visit),
+    Step("domain_person", _b_person),
+    Step("domain_procedure_occurrence", _b_procedure),
+    Step("domain_device_exposure", _b_device),
+    Step("domain_payer_plan_period", _b_payer),
+    Step("domain_provider", _b_provider),
+    Step("domain_care_site", _b_care_site),
+    Step("derived_death", _death_step),
+    Step("derived_eras", _eras_step,
+         reads=("omop_drug_exposure", "omop_condition_occurrence")),
+    Step("derived_cost", _cost_step, reads=(
+        "omop_visit_occurrence", "omop_drug_exposure",
+        "omop_procedure_occurrence",
+    )),
+    Step("derived_observation_period", _obs_period_step, reads=(
+        "omop_person", "omop_visit_occurrence", "omop_condition_occurrence",
+        "omop_drug_exposure", "omop_procedure_occurrence",
+        "omop_measurement", "omop_observation",
+    )),
 ]
-
-
-#: step name → the materialized omop_* layers the step READS at plan-build
-#: time. run_pipeline blocks a step only on these (not on every
-#: outstanding write): the derived step needs the person/fact layers it
-#: unions and costs, but not care_site/provider/location/payer/device —
-#: those writes overlap with the derived builds. A step absent here reads
-#: no materialized layer (typing/id-map/concept-map steps consume raw and
-#: typed plans only).
-STEP_READS: dict[str, tuple[str, ...]] = {
-    # domains deliberately does NOT settle omop_location: the fused
-    # person/care_site lookups broadcast the CACHED dim plan (tiny,
-    # computed once — BlockManager serializes concurrent cache fills), so
-    # the location write overlaps with the domain writes instead of
-    # gating them.
-    "derived_eras": ("omop_drug_exposure", "omop_condition_occurrence"),
-    "derived_cost": (
-        "omop_visit_occurrence",
-        "omop_drug_exposure",
-        "omop_procedure_occurrence",
-    ),
-    "derived_observation_period": (
-        "omop_person",
-        "omop_visit_occurrence",
-        "omop_condition_occurrence",
-        "omop_drug_exposure",
-        "omop_procedure_occurrence",
-        "omop_measurement",
-        "omop_observation",
-    ),
-}
 
 # Measured dead end (r8), recorded so it isn't retried: letting the leaf
 # derived steps (eras/cost/observation_period) plan against the LAZY
@@ -521,13 +447,13 @@ def run_pipeline(
     raw_tables: dict[str, DataFrame],
     checkpoint_path: str | None = None,
     output_dir: str | None = None,
-    partition_specs: dict[str, list[str]] | None = None,
     vocab_tables: dict[str, DataFrame] | None = None,
     partition_by_year: bool = False,
     bucket_by_person: bool = False,
     n_buckets: int = 32,
 ) -> dict[str, DataFrame]:
-    """Execute the DAG over raw all-string inputs; returns the layer dict.
+    """Run ETL_STEPS in order over raw all-string inputs; returns the
+    layer dict.
 
     ``vocab_tables`` (e.g. ``load_vocabulary(spark, athena_dir)``: keys
     'concept', 'concept_relationship', …) activates the concept-mapping
@@ -552,83 +478,58 @@ def run_pipeline(
     for name, df in (vocab_tables or {}).items():
         ctx[f"vocab_{name}"] = df
 
-    from concurrent.futures import Future, ThreadPoolExecutor
-
     # One shared writer pool for the WHOLE run (8 concurrent Spark jobs
     # measured fastest on local[32] for the 50k-patient/17-output bench;
     # Spark job submission is thread-safe and the scheduler interleaves
     # stages across cores — the reference ran its domain steps under
     # concurrent.futures the same way). Writes are submitted as futures
-    # and settled PER KEY: a later step blocks only on the specific
-    # layers it reads (STEP_READS), so e.g. the derived step's cost build
-    # starts while care_site/provider/payer/device writes are still
-    # running — the step barrier was ~1/4 of wall time at 50k patients.
-    n_workers = int(os.environ.get("SPARK_GRAFT_ETL_POOL", "8"))
-    pool = ThreadPoolExecutor(max_workers=n_workers) if output_dir else None
+    # and settled PER KEY: a later step blocks only on the layers it
+    # reads (Step.reads), so e.g. the cost build starts while
+    # care_site/provider/payer/device writes are still running — the step
+    # barrier was ~1/4 of wall time at 50k patients.
+    pool = ThreadPoolExecutor(max_workers=8) if output_dir else None
     futures: dict[str, Future] = {}
     bucketed: set[str] = set()
 
-    # optional wall-clock trace (SPARK_GRAFT_ETL_TRACE=1): per-write and
-    # per-step spans relative to run start, for pool/overlap profiling
-    trace_on = os.environ.get("SPARK_GRAFT_ETL_TRACE") == "1"
-    t_run = time.perf_counter()
-
-    def trace(kind: str, name: str, t0: float) -> None:
-        if trace_on:
-            now = time.perf_counter()
-            print(
-                f"[etl-trace] {kind:5} {name:35} "
-                f"start={t0 - t_run:7.2f}s dur={now - t0:6.2f}s",
-                flush=True,
-            )
-
     def write_one(key: str, df: DataFrame) -> None:
-        t0 = time.perf_counter()
-        _write_one_inner(key, df)
-        trace("write", key, t0)
-
-    def _write_one_inner(key: str, df: DataFrame) -> None:
-        path = os.path.join(output_dir, key)
-        if not ckpt.is_done(f"write_{key}"):
-            spec = list(partition_specs.get(key, [])) if partition_specs else []
-            if partition_by_year and key in YEAR_PARTITION_DATES:
-                # derived year directory key: analytics filtered on the
-                # event year prune to those directories (PartitionFilters
-                # in the scan — asserted by plan test)
-                from pyspark.sql import functions as F
-
-                df = df.withColumn(
-                    "year", F.year(F.col(YEAR_PARTITION_DATES[key]))
-                )
-                spec.append("year")
+        if ckpt.is_done(f"write_{key}"):
             if bucket_by_person and "person_id" in df.columns:
-                from synthea2omop_etl_spark.sources.writers import (
-                    write_bucketed,
-                )
+                bucketed.add(key)  # written in a previous (resumed) run
+            return
+        path = os.path.join(output_dir, key)
+        spec: list[str] = []
+        if partition_by_year and key in YEAR_PARTITION_DATES:
+            # derived year directory key: analytics filtered on the
+            # event year prune to those directories (PartitionFilters
+            # in the scan — asserted by plan test)
+            from pyspark.sql import functions as F
 
-                write_bucketed(
-                    df,
-                    key,
-                    ["person_id"],
-                    n_buckets,
-                    sort_by=["person_id"],
-                    partition_by=spec or None,
-                    path=path,
-                )
-                bucketed.add(key)
-                return
-            writer = df.write.mode("overwrite")
-            if spec:
-                writer = writer.partitionBy(*spec)
-            writer.parquet(path)
-        elif bucket_by_person and "person_id" in df.columns:
-            bucketed.add(key)  # written in a previous (resumed) run
+            df = df.withColumn("year", F.year(F.col(YEAR_PARTITION_DATES[key])))
+            spec.append("year")
+        if bucket_by_person and "person_id" in df.columns:
+            from synthea2omop_etl_spark.sources.writers import write_bucketed
+
+            write_bucketed(
+                df,
+                key,
+                ["person_id"],
+                n_buckets,
+                sort_by=["person_id"],
+                partition_by=spec or None,
+                path=path,
+            )
+            bucketed.add(key)
+            return
+        writer = df.write.mode("overwrite")
+        if spec:
+            writer = writer.partitionBy(*spec)
+        writer.parquet(path)
 
     def materialize(new_keys: list[str]) -> None:
         """Submit each produced OMOP layer's write to the shared pool.
         The ctx swap to a scan of the written parquet happens in
         settle() — downstream steps read materialized data instead of
-        re-executing the whole upstream DAG per consumer (the layered
+        re-executing the whole upstream plan per consumer (the layered
         write-once/read-many design that also holds at 100 TB).
 
         Physical layout: facts can be partitioned (e.g. by event year) for
@@ -642,11 +543,11 @@ def run_pipeline(
             if key.startswith("omop_"):
                 futures[key] = pool.submit(write_one, key, ctx[key])
 
-    def settle(keys: list[str] | None = None) -> None:
-        """Block on the given keys' writes (all outstanding when None),
-        mark their checkpoints, and swap ctx to the written layer."""
+    def settle(keys: Iterable[str]) -> None:
+        """Block on the given keys' outstanding writes, mark their
+        checkpoints, and swap ctx to the written layer."""
         todo = []
-        for key in list(futures) if keys is None else keys:
+        for key in keys:
             fut = futures.pop(key, None)
             if fut is None:
                 continue
@@ -657,57 +558,31 @@ def run_pipeline(
         # bucketed layers MUST re-enter via the catalog — a bare parquet
         # scan of the same files would lose the bucket spec and
         # reintroduce the shuffle bucketing exists to remove
-        def reread(key: str) -> tuple[str, DataFrame]:
-            t0 = time.perf_counter()
-            df = (
-                spark.table(key)
-                if key in bucketed
-                else spark.read.parquet(os.path.join(output_dir, key))
-            )
-            trace("read", key, t0)
-            return key, df
+        def reread(key: str) -> DataFrame:
+            if key in bucketed:
+                return spark.table(key)
+            return spark.read.parquet(os.path.join(output_dir, key))
 
         # the re-reads are DRIVER-side footer/schema resolution (~0.1-0.6s
         # each, no executor job) — run them on a transient thread pool
         # rather than serially (~2.5s of the 50k-patient run), and NOT on
         # the shared writer pool, where they would queue behind multi-
         # second write jobs during partial settles
-        if len(todo) > 1:
-            from concurrent.futures import ThreadPoolExecutor as _TPE
+        if todo:
+            with ThreadPoolExecutor(max_workers=min(8, len(todo))) as rp:
+                ctx.update(zip(todo, rp.map(reread, todo)))
 
-            with _TPE(max_workers=min(8, len(todo))) as rp:
-                for key, df in rp.map(reread, todo):
-                    ctx[key] = df
-        else:
-            for key in todo:
-                ctx[key] = reread(key)[1]
-
-    done: set[str] = set()
-    pending = list(ETL_STEPS)
     try:
-        while pending:
-            progressed = False
-            for step in list(pending):
-                if all(d in done for d in step.deps):
-                    # block only on the layers this step actually reads;
-                    # every other write keeps running underneath the
-                    # step's plan construction and its own writes
-                    settle([k for k in STEP_READS.get(step.name, ())
-                            if k in futures])
-                    t_step = time.perf_counter()
-                    produced = step.run(ctx)
-                    trace("step", step.name, t_step)
-                    ctx.update(produced)
-                    materialize(list(produced))
-                    ckpt.mark_done(step.name)
-                    done.add(step.name)
-                    pending.remove(step)
-                    progressed = True
-            if not progressed:
-                missing = [(s.name, s.deps) for s in pending]
-                raise RuntimeError(f"DAG stuck; unresolved deps: {missing}")
-        if output_dir:
-            settle()  # drain every outstanding write before returning
+        for step in ETL_STEPS:
+            # block only on the layers this step reads; every other write
+            # keeps running underneath the step's plan construction and
+            # its own writes
+            settle(step.reads)
+            produced = step.run(ctx)
+            ctx.update(produced)
+            materialize(list(produced))
+            ckpt.mark_done(step.name)
+        settle(list(futures))  # drain every outstanding write
     finally:
         if pool is not None:
             # on the success path this is a no-op join; on a step/write
@@ -720,7 +595,7 @@ def run_pipeline(
         # a long-lived session (repeated pipeline runs, the bench loop)
         # holds flat storage instead of one pinned map set per run
         for k in ("person_map", "visit_map", "provider_map", "care_site_map",
-                  "location_dim_cache"):
+                  "location_dim"):
             if k in ctx:
                 ctx[k].unpersist()
     return ctx

@@ -125,6 +125,30 @@ def test_cli_run_validate_analytics(csv_dir, tmp_path, capsys, spark):
     assert os.path.isdir(os.path.join(out_dir, "achilles_results_dist"))
 
 
+def test_cli_run_completes_checkpoint_ledger(csv_dir, tmp_path, capsys):
+    """Default-tier smoke of `cli run --checkpoint`: every pipeline step
+    lands in the ledger and /api/etl/status reads it as 100% done."""
+    from synthea2omop_etl_spark.plans.pipeline import ETL_STEPS
+    from synthea2omop_etl_spark.serve import _etl_status
+
+    ckpt = str(tmp_path / "ckpt.json")
+    rc = main(
+        ["run", "--input", str(csv_dir), "--output", str(tmp_path / "omop"),
+         "--checkpoint", ckpt]
+    )
+    assert rc == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    with open(ckpt) as f:
+        ledger = json.load(f)
+    for step in ETL_STEPS:
+        assert ledger[step.name]["completed"], step.name
+    for table in report["tables"]:
+        assert ledger[f"write_omop_{table}"]["completed"], table
+    status = _etl_status(ckpt)
+    assert status["overallProgress"] == 100.0
+    assert status["completedSteps"] == status["totalSteps"] == len(ETL_STEPS)
+
+
 def test_cli_run_with_vocab_dir(csv_dir, tmp_path, capsys, spark):
     """cli run --vocab-dir end-to-end: an Athena-style export dir activates
     the concept-mapping step and the written parquet carries mapped

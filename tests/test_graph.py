@@ -213,3 +213,14 @@ def test_cut_lineage_reliable_checkpoint_knob(spark, tmp_path, monkeypatch):
     df = spark.range(5)
     assert sorted(r.id for r in cut_lineage(df, eager=True).collect()) == \
         list(range(5))
+    # the knob is read per call: switching it moves the next reliable
+    # checkpoint to the new dir, and switching back returns to the first
+    for d in (tmp_path / "reliable_ckpt_b", tmp_path / "reliable_ckpt"):
+        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(d))
+        assert sorted(
+            r.id for r in cut_lineage(spark.range(3), eager=True).collect()
+        ) == [0, 1, 2]
+        current = spark.sparkContext.getCheckpointDir()
+        assert f"{d}/" in current
+        assert os.listdir(current.removeprefix("file:")), \
+            f"no checkpoint written under {current}"

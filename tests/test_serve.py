@@ -81,7 +81,7 @@ def test_etl_status(api):
     assert steps["typing_patients"]["status"] == "Completed"
     assert steps["typing_patients"]["rows"] == 7
     assert steps["id_maps"]["status"] == "Completed"
-    assert steps["domains"]["status"] == "Pending"
+    assert steps["domain_person"]["status"] == "Pending"
     assert [t["targetTable"] for t in body["tableProgress"]] == [
         "omop_person"
     ]
